@@ -2,15 +2,23 @@
 
 Scale design (the part gogstash never faced — one box, one stream):
 
-- ONE scan feeds every sink: the filtered/routed frame is persisted
-  (MEMORY_AND_DISK) before fan-out so K sinks don't re-run the parse.
-- Hot conv_ids are salted: repartition on (conv_id, salt) where
-  salt = xxhash64(conv_id, turn_idx) % n_salts, so a conversation with
-  30% of all turns spreads over n_salts partitions instead of one.
+- ONE scan feeds every sink: the default mode explodes the routed frame
+  into one partitioned write; per_sink mode localCheckpoints it once so
+  K sinks don't re-run the parse.
 - Route predicates are native SQL expressions; the default write is ONE
-  partitionBy("route") pass over a data-sized (route, salt) shuffle
-  (write_mode="partitioned"). write_mode="per_sink" opts into K
-  separate filtered writes with per-sink resume granularity.
+  partitionBy("route") pass over an AQE REBALANCE keyed on route alone
+  (write_mode="partitioned"). A route's rows land in one write task, so
+  a small route is one file; AQE splits a hot route into pieces of the
+  advisory partition size, so files follow the data, not the cores.
+- The committed by_route output is read back ONCE per run, with the
+  schema that was written (no partition-type inference: a route "007"
+  stays the string "007"). Lineage, protocol sinks and aggregates share
+  that one frame and its file listing.
+- write_mode="per_sink" opts into K separate filtered writes with
+  per-sink resume granularity. Its hot conv_ids are salted: repartition
+  on (conv_id, salt) where salt = xxhash64(conv_id, turn_idx) % n_salts,
+  so a conversation with 30% of all turns spreads over n_salts
+  partitions instead of one.
 - Resume: a JSON snapshot ledger (the sincedb analog, reference
   input/file/sincedb.go:21-91) records committed sinks per run-id;
   a resumed run skips completed sinks. Writes go to a temp dir and are
@@ -30,6 +38,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from gogstash_spark.operators import Context
 from gogstash_spark.plans.compile import DOC_ID, ROUTES, CompiledPipeline, compile_pipeline
@@ -144,22 +153,23 @@ def _fanout_distribute(
     exploded: DataFrame, n_partitions: int, size_by_data: bool
 ) -> DataFrame:
     """Distribute the exploded (route, event) frame for the partitionBy
-    write. size_by_data (the default path): AQE REBALANCE over
-    (route, salt) — partition COUNT follows the data volume
-    (advisoryPartitionSizeInBytes), so the write task's buffered
-    partition stays constant-size as the input grows. The salt modulus
-    scales 4x wider than cores: rebalance can split a hash partition,
-    but distinct (route, salt) keys are what spread hot routes in the
-    first place. With an explicit n_partitions, the old fixed
-    repartition is used."""
-    n_salts = 4 * n_partitions if size_by_data else n_partitions
-    salt = _salt_col(exploded.drop("route"), n_salts)
-    out = exploded.withColumn("__salt", salt)
+    write. size_by_data (the default path): AQE REBALANCE keyed on
+    route alone. Each route hashes to one shuffle partition, so a write
+    task opens one file per route it holds; AQE coalesces small routes
+    into shared tasks and splits a route larger than
+    advisoryPartitionSizeInBytes into advisory-sized pieces (rebalance
+    skew splitting), so the file count and size follow the data volume,
+    and a hot route still spreads over tasks. With an explicit
+    n_partitions, the fixed salted repartition on (route, salt) is used:
+    every task then holds every route, one file each."""
     if size_by_data:
-        out = out.hint("rebalance", "route", "__salt")
-    else:
-        out = out.repartition(n_partitions, F.col("route"), F.col("__salt"))
-    return out.drop("__salt")
+        return exploded.hint("rebalance", "route")
+    salt = _salt_col(exploded.drop("route"), n_partitions)
+    return (
+        exploded.withColumn("__salt", salt)
+        .repartition(n_partitions, F.col("route"), F.col("__salt"))
+        .drop("__salt")
+    )
 
 
 def salted_repartition(
@@ -187,6 +197,22 @@ def resolve_table_format(spark: SparkSession, requested: str | None) -> tuple[st
     return (str(requested).lower(), None) if ok else ("parquet", why)
 
 
+def _read_written(
+    spark: SparkSession, fmt: str, ident: str | None, path: str, schema: dict | None
+) -> DataFrame:
+    """The committed by_route output as one DataFrame. A parquet commit
+    is read with the schema that was written, so partition discovery
+    keeps `route` a string (no int/date inference from directory names
+    such as route=007) and no footer is opened to infer a schema.
+    Ledgers without a recorded schema fall back to inference."""
+    if fmt == "iceberg" and ident:
+        return spark.read.table(ident)
+    reader = spark.read.format(fmt)
+    if fmt == "parquet" and schema:
+        reader = reader.schema(StructType.fromJson(schema))
+    return reader.load(path)
+
+
 def run_pipeline(
     spark: SparkSession,
     spec: PipelineSpec | dict,
@@ -202,20 +228,24 @@ def run_pipeline(
 ) -> RunResult:
     """write_mode="partitioned" (default, the scale path): ONE
     partitionBy(route) write with a data-sized shuffle, no
-    materialization. "per_sink" is the opt-in for workloads needing
-    per-sink resume granularity over K heterogeneous protocol sinks; its
-    plan localCheckpoints the routed frame, which serializes on local
-    mode's single block manager and materializes the routed dataset to
+    materialization, then ONE read-back of the committed by_route
+    output with the written schema. The per-file lineage sidecar, the
+    per-route row totals, the protocol sinks and the aggregates all
+    derive from that one frame, so the output is listed once per run.
+    "per_sink" is the opt-in for workloads needing per-sink resume
+    granularity over K heterogeneous protocol sinks; its plan
+    localCheckpoints the routed frame, which serializes on local mode's
+    single block manager and materializes the routed dataset to
     executor storage on a cluster — measured round 1, see below.
 
     n_partitions=None (default) sizes the fan-out shuffle BY DATA,
-    not by cores: an AQE REBALANCE over (route, salt) targets
-    advisoryPartitionSizeInBytes per write task, so 3x the input means
-    ~3x the write tasks automatically — a fixed cores-based count made
-    each task's buffered partition grow with the input (measured at sf3
-    / 15M turns, local[32]: fixed 32 -> 96s, 256 -> 60s; rebalance
-    picks the count at runtime). Pass an explicit n_partitions to pin
-    the old behavior."""
+    not by cores: an AQE REBALANCE keyed on route targets
+    advisoryPartitionSizeInBytes per write task, so small routes write
+    one file each and a hot route splits into advisory-sized files — a
+    fixed cores-based count made each task's buffered partition grow
+    with the input (measured at sf3 / 15M turns, local[32]: fixed 32 ->
+    96s, 256 -> 60s; rebalance picks the count at runtime). Pass an
+    explicit n_partitions to pin the fixed salted repartition."""
     if isinstance(spec, dict):
         spec = PipelineSpec.from_dict(spec)
     ctx = Context(spark=spark, base_dir=base_dir)
@@ -295,310 +325,301 @@ def run_pipeline(
     # per_sink mode always materializes `routed` (localCheckpoint above);
     # partitioned mode only runs it when the write isn't resume-skipped
     routed_executed = write_mode != "partitioned"
-    try:
-        if write_mode == "partitioned":
-            # ONE pass, no materialization: explode routes -> shuffle on
-            # (route, salt) so each write task holds exactly ONE open
-            # parquet writer -> dynamic-partitioned write (the
-            # reference's per-path writer goroutines,
-            # output/file/outputfile.go:190-325, as a partitionBy write).
-            # The salt spreads hot routes/conversations over tasks.
-            # Per-sink resume granularity is traded for one atomic commit.
-            fmt, fb_reason = resolve_table_format(spark, table_format)
-            # resume must read with the format the data was COMMITTED
-            # under, not this run's request: a run committed as parquet
-            # then resumed with table_format=iceberg would otherwise try
-            # to read the parquet by_route dir through the iceberg
-            # source. (Ledgers written before the format was recorded
-            # can only be parquet commits on this image — the ACID
-            # branch was probe-gated off — so parquet is the right
-            # default for a missing key.)
-            committed_meta = ledger.state.get("sinks", {}).get("__partitioned__", {})
-            write_skipped = resume and ledger.committed("__partitioned__")
-            if write_skipped:
-                read_fmt = committed_meta.get("table_format", "parquet")
-                read_ident = committed_meta.get("table_ident")
-            else:
-                read_fmt, read_ident = fmt, table_ident
-            if fmt == "iceberg" and not table_ident and not write_skipped:
-                # only a run that will actually WRITE iceberg needs the
-                # identifier — a resume serving from an earlier commit
-                # reads with the ledger's format and must not be blocked
-                raise ValueError(
-                    "table_format='iceberg' needs table_ident='catalog.db.table': "
-                    "Iceberg's v1 save(path) cannot CREATE a partitioned table — "
-                    "the V2 writeTo(ident).partitionedBy(...).createOrReplace() "
-                    "path is used instead"
-                )
-            # "used" reports what this run actually READS AND SERVES:
-            # on a write-skipping resume that is the ledger's committed
-            # format, not this invocation's request
-            result.metrics["table_format"] = {
-                "requested": table_format, "used": read_fmt,
-                **({"fallback_reason": fb_reason} if fb_reason else {}),
-                **({"resumed_from_commit": True} if write_skipped else {}),
-            }
-
-            def _read_routed():
-                if read_fmt == "iceberg" and read_ident:
-                    return spark.read.table(read_ident)
-                return spark.read.format(read_fmt).load(os.path.join(out_dir, "by_route"))
-
-            if not write_skipped:
-                routed_executed = True
-                part_dir = os.path.join(out_dir, "by_route")
-                tmp_dir = part_dir + ".__tmp__"
-                exploded = routed.select(F.explode(ROUTES).alias("route"), "*").drop(ROUTES)
-                doc_routes = [r for r in plan.routes if r.doc_id_template]
-                if doc_routes:
-                    from gogstash_spark.logevent import format_expr
-                    from gogstash_spark.plans.compile import route_value_expr
-
-                    # elastic document_id semantics: one row per (index,
-                    # doc id). Dedup applies ONLY to exploded copies whose
-                    # route belongs to a doc-id sink, keyed by THAT sink's
-                    # rendered template — copies routed to plain sinks get
-                    # a unique surrogate and pass through untouched. The
-                    # _doc_id column is computed HERE per exploded copy so
-                    # each route partition carries ITS sink's doc ids
-                    # (plain sinks in per_sink mode never see it at all).
-                    pieces = []
-                    for r in doc_routes:
-                        rv = route_value_expr(exploded, r)
-                        rendered = format_expr(exploded, str(r.doc_id_template))
-                        pieces.append(F.when(
-                            (F.col("route") == rv) & rendered.isNotNull(), rendered
-                        ))
-                    per_route_id = F.coalesce(*pieces) if len(pieces) > 1 else pieces[0]
-                    dd = F.coalesce(
-                        F.concat(F.lit("d|"), per_route_id),
-                        F.concat(
-                            F.lit("r|"), F.monotonically_increasing_id().cast("string")
-                        ),
-                    )
-                    exploded = (
-                        exploded.withColumn(DOC_ID, per_route_id)
-                        .withColumn("__dd", dd)
-                        .dropDuplicates(["route", "__dd"])
-                        .drop("__dd")
-                    )
-                exploded = _fanout_distribute(exploded, n_partitions, size_by_data)
-                if fmt == "parquet":
-                    # no table format on the classpath: atomic commit =
-                    # write to a temp dir + one rename
-                    exploded.write.mode("overwrite").partitionBy("route").parquet(tmp_dir)
-                    if os.path.exists(part_dir):
-                        shutil.rmtree(part_dir)
-                    os.replace(tmp_dir, part_dir)
-                elif fmt == "iceberg":
-                    # ACID snapshot commit via DataFrameWriterV2: the v1
-                    # writer's save(path) requires a pre-existing table
-                    # and rejects partitionBy for creation; writeTo()
-                    # creates-or-replaces the partitioned table in one
-                    # transaction. UNTESTED on this image (no iceberg
-                    # runtime jar — the probe above guarantees this
-                    # branch only runs on a provisioned cluster).
-                    exploded.writeTo(table_ident).partitionedBy(
-                        F.col("route")
-                    ).createOrReplace()
-                else:
-                    # delta: transaction-log commit; the v1 writer DOES
-                    # support partitioned table creation at a path.
-                    # UNTESTED on this image (no delta jar; probe-gated).
-                    exploded.write.format(fmt).mode("overwrite").partitionBy(
-                        "route"
-                    ).save(part_dir)
-                # per-partition (per output file) row-count lineage in one
-                # pruned scan, written to a parquet SIDECAR — at 100 TB the
-                # file list is 10^5-10^6 entries, which must never ride
-                # through the driver or the JSON ledger. Only O(routes)
-                # totals are collected.
-                # input_file_name() returns '' under DSv2 scans — the
-                # ACID formats use their metadata column instead
-                # (iceberg: _file, delta: _metadata.file_path); the
-                # parquet DSv1 scan keeps input_file_name()
-                if fmt == "iceberg":
-                    file_col = F.col("_file")
-                elif fmt == "delta":
-                    file_col = F.col("_metadata.file_path")
-                else:
-                    file_col = F.input_file_name()
-                lineage_df = (
-                    _read_routed()
-                    .groupBy("route", file_col.alias("file"))
-                    .agg(F.count(F.lit(1)).alias("rows"))
-                )
-                lin_dir = os.path.join(out_dir, "_lineage")
-                lin_tmp = lin_dir + ".__tmp__"
-                lineage_df.write.mode("overwrite").parquet(lin_tmp)
-                if os.path.exists(lin_dir):
-                    shutil.rmtree(lin_dir)
-                os.replace(lin_tmp, lin_dir)
-                rollup = (
-                    spark.read.parquet(lin_dir)
-                    .groupBy("route")
-                    .agg(F.sum("rows").alias("rows"), F.count(F.lit(1)).alias("files"))
-                    .collect()
-                )
-                counts: dict[str, int] = {rr["route"]: int(rr["rows"]) for rr in rollup}
-                result.sink_rows = {
-                    r.sink: int(counts.get(r.sink, 0))
-                    for r in plan.routes
-                    if not r.index_template
-                }
-                for k, v in counts.items():  # dynamic %{}-index route values
-                    result.sink_rows.setdefault(k, int(v))
-                result.metrics["lineage"] = {
-                    "files": sum(int(r["files"]) for r in rollup),
-                    "path": lin_dir,
-                    "route_rows": counts,
-                }
-                ledger.commit(
-                    "__partitioned__",
-                    sum(result.sink_rows.values()),
-                    # the format ACTUALLY used rides in the ledger so a
-                    # resumed run reads by_route with it, whatever
-                    # format the resume invocation asks for
-                    extra={
-                        "route_rows": counts, "lineage_path": lin_dir,
-                        "table_format": fmt,
-                        **({"table_ident": table_ident} if table_ident else {}),
-                    },
-                )
-            # protocol sinks (http/socket/gelf/loki) emit from the written
-            # columnar output — a pruned per-route scan, committed per sink
-            # so a resumed run replays only the unsent ones
-            for r in plan.routes:
-                if r.out_cfg is None:
-                    continue
-                if resume and ledger.committed(r.sink):
-                    result.skipped_sinks.append(r.sink)
-                    result.sink_rows[r.sink] = ledger.state["sinks"][r.sink]["rows"]
-                    continue
-                from gogstash_spark.outputs import emit
-
-                df_r = (
-                    _read_routed()
-                    .filter(F.col("route") == r.sink)
-                    .drop("route", DOC_ID)  # internal cols never leave the engine
-                )
-                rows = emit(df_r, r.out_cfg)
-                result.sink_rows[r.sink] = rows
-                ledger.commit(r.sink, rows)
-                result.metrics[r.sink] = {"rows": rows}
-            routes_to_write = []
+    if write_mode == "partitioned":
+        # ONE pass, no materialization: explode routes -> rebalance on
+        # route -> dynamic-partitioned write (the reference's per-path
+        # writer goroutines, output/file/outputfile.go:190-325, as a
+        # partitionBy write). Per-sink resume granularity is traded for
+        # one atomic commit.
+        fmt, fb_reason = resolve_table_format(spark, table_format)
+        # resume must read with the format (and schema) the data was
+        # COMMITTED under, not this run's request: a run committed as
+        # parquet then resumed with table_format=iceberg would otherwise
+        # try to read the parquet by_route dir through the iceberg
+        # source. (Ledgers written before the format was recorded can
+        # only be parquet commits — the ACID branch was probe-gated off
+        # without a runtime jar — so parquet is the right default for a
+        # missing key.)
+        committed_meta = ledger.state.get("sinks", {}).get("__partitioned__", {})
+        write_skipped = resume and ledger.committed("__partitioned__")
+        if write_skipped:
+            read_fmt = committed_meta.get("table_format", "parquet")
+            read_ident = committed_meta.get("table_ident")
+            read_schema = committed_meta.get("schema")
         else:
-            routes_to_write = plan.routes
-            dyn = [r.sink for r in plan.routes if r.index_template]
-            if dyn:
-                raise ValueError(
-                    "dynamic %%{}-index sinks %s need write_mode='partitioned' "
-                    "(one partitionBy(route) write handles any index cardinality)" % dyn
-                )
-        for route in routes_to_write:
-            sink = route.sink
-            sink_dir = os.path.join(out_dir, sink)
-            if resume and ledger.committed(sink) and (
-                route.out_cfg is not None or os.path.exists(sink_dir)
-            ):
-                result.skipped_sinks.append(sink)
-                result.sink_rows[sink] = ledger.state["sinks"][sink]["rows"]
-                continue
-            sink_df = routed.filter(F.array_contains(F.col(ROUTES), sink)).drop(ROUTES)
-            if route.doc_id_template:
-                from gogstash_spark.logevent import format_expr
+            read_fmt, read_ident = fmt, table_ident
+        if fmt == "iceberg" and not table_ident and not write_skipped:
+            # only a run that will actually WRITE iceberg needs the
+            # identifier — a resume serving from an earlier commit
+            # reads with the ledger's format and must not be blocked
+            raise ValueError(
+                "table_format='iceberg' needs table_ident='catalog.db.table': "
+                "Iceberg's v1 save(path) cannot CREATE a partitioned table — "
+                "the V2 writeTo(ident).partitionedBy(...).createOrReplace() "
+                "path is used instead"
+            )
+        # "used" reports what this run actually READS AND SERVES:
+        # on a write-skipping resume that is the ledger's committed
+        # format, not this invocation's request
+        result.metrics["table_format"] = {
+            "requested": table_format, "used": read_fmt,
+            **({"fallback_reason": fb_reason} if fb_reason else {}),
+            **({"resumed_from_commit": True} if write_skipped else {}),
+        }
+        part_dir = os.path.join(out_dir, "by_route")
 
-                # THIS sink's rendered doc id (the shared _doc_id column
-                # may carry another doc-sink's rendering for co-routed rows)
-                sink_df = sink_df.withColumn(
-                    DOC_ID, format_expr(sink_df, str(route.doc_id_template))
+        if not write_skipped:
+            routed_executed = True
+            tmp_dir = part_dir + ".__tmp__"
+            exploded = routed.select(F.explode(ROUTES).alias("route"), "*").drop(ROUTES)
+            doc_routes = [r for r in plan.routes if r.doc_id_template]
+            if doc_routes:
+                from gogstash_spark.logevent import format_expr
+                from gogstash_spark.plans.compile import route_value_expr
+
+                # elastic document_id semantics: one row per (index,
+                # doc id). Dedup applies ONLY to exploded copies whose
+                # route belongs to a doc-id sink, keyed by THAT sink's
+                # rendered template — copies routed to plain sinks get
+                # a unique surrogate and pass through untouched. The
+                # _doc_id column is computed HERE per exploded copy so
+                # each route partition carries ITS sink's doc ids
+                # (plain sinks in per_sink mode never see it at all).
+                pieces = []
+                for r in doc_routes:
+                    rv = route_value_expr(exploded, r)
+                    rendered = format_expr(exploded, str(r.doc_id_template))
+                    pieces.append(F.when(
+                        (F.col("route") == rv) & rendered.isNotNull(), rendered
+                    ))
+                per_route_id = F.coalesce(*pieces) if len(pieces) > 1 else pieces[0]
+                dd = F.coalesce(
+                    F.concat(F.lit("d|"), per_route_id),
+                    F.concat(
+                        F.lit("r|"), F.monotonically_increasing_id().cast("string")
+                    ),
                 )
-                sink_df = (
-                    sink_df.withColumn(
-                        "__dd",
-                        F.coalesce(
-                            F.col(DOC_ID),
-                            F.monotonically_increasing_id().cast("string"),
-                        ),
-                    )
-                    .dropDuplicates(["__dd"])
+                exploded = (
+                    exploded.withColumn(DOC_ID, per_route_id)
+                    .withColumn("__dd", dd)
+                    .dropDuplicates(["route", "__dd"])
                     .drop("__dd")
                 )
-            if route.out_cfg is not None:
-                # protocol sink: stream out via foreachPartition, count
-                # task-side, commit by count (no directory to rename)
-                from gogstash_spark.outputs import emit
+            exploded = _fanout_distribute(exploded, n_partitions, size_by_data)
+            read_schema = exploded.schema.jsonValue()
+            if fmt == "parquet":
+                # no table format on the classpath: atomic commit =
+                # write to a temp dir + one rename
+                exploded.write.mode("overwrite").partitionBy("route").parquet(tmp_dir)
+                if os.path.exists(part_dir):
+                    shutil.rmtree(part_dir)
+                os.replace(tmp_dir, part_dir)
+            elif fmt == "iceberg":
+                # ACID snapshot commit via DataFrameWriterV2: the v1
+                # writer's save(path) requires a pre-existing table
+                # and rejects partitionBy for creation; writeTo()
+                # creates-or-replaces the partitioned table in one
+                # transaction. Not covered by the test suite (no
+                # iceberg runtime jar on its classpath — the probe
+                # above guarantees this branch only runs on a
+                # provisioned cluster).
+                exploded.writeTo(table_ident).partitionedBy(
+                    F.col("route")
+                ).createOrReplace()
+            else:
+                # delta: transaction-log commit; the v1 writer DOES
+                # support partitioned table creation at a path.
+                # Not covered by the test suite (no delta jar on its
+                # classpath; probe-gated).
+                exploded.write.format(fmt).mode("overwrite").partitionBy(
+                    "route"
+                ).save(part_dir)
 
-                rows = emit(sink_df.drop(DOC_ID), route.out_cfg)
-                result.sink_rows[sink] = rows
-                ledger.commit(sink, rows)
-                result.metrics[sink] = {"rows": rows}
+        # ONE read-back per run: every consumer below shares this
+        # frame's file index, so by_route is listed once
+        written = _read_written(spark, read_fmt, read_ident, part_dir, read_schema)
+
+        if not write_skipped:
+            # per-partition (per output file) row-count lineage in one
+            # pruned scan, written to a parquet SIDECAR — at 100 TB the
+            # file list is 10^5-10^6 entries, which must never ride
+            # through the driver or the JSON ledger. Only O(routes)
+            # totals are collected, rolled up from the same lineage
+            # frame (the sidecar is never read back).
+            # input_file_name() returns '' under DSv2 scans — the
+            # ACID formats use their metadata column instead
+            # (iceberg: _file, delta: _metadata.file_path); the
+            # parquet DSv1 scan keeps input_file_name()
+            if fmt == "iceberg":
+                file_col = F.col("_file")
+            elif fmt == "delta":
+                file_col = F.col("_metadata.file_path")
+            else:
+                file_col = F.input_file_name()
+            lineage_df = written.groupBy("route", file_col.alias("file")).agg(
+                F.count(F.lit(1)).alias("rows")
+            )
+            lin_dir = os.path.join(out_dir, "_lineage")
+            lin_tmp = lin_dir + ".__tmp__"
+            lineage_df.write.mode("overwrite").parquet(lin_tmp)
+            if os.path.exists(lin_dir):
+                shutil.rmtree(lin_dir)
+            os.replace(lin_tmp, lin_dir)
+            rollup = (
+                lineage_df.groupBy("route")
+                .agg(F.sum("rows").alias("rows"), F.count(F.lit(1)).alias("files"))
+                .collect()
+            )
+            counts: dict[str, int] = {rr["route"]: int(rr["rows"]) for rr in rollup}
+            result.sink_rows = {
+                r.sink: int(counts.get(r.sink, 0))
+                for r in plan.routes
+                if not r.index_template
+            }
+            for k, v in counts.items():  # dynamic %{}-index route values
+                result.sink_rows.setdefault(k, int(v))
+            result.metrics["lineage"] = {
+                "files": sum(int(r["files"]) for r in rollup),
+                "path": lin_dir,
+                "route_rows": counts,
+            }
+            ledger.commit(
+                "__partitioned__",
+                sum(result.sink_rows.values()),
+                # the format and schema ACTUALLY written ride in the
+                # ledger so a resumed run reads by_route the same way,
+                # whatever format the resume invocation asks for
+                extra={
+                    "route_rows": counts, "lineage_path": lin_dir,
+                    "table_format": fmt, "schema": read_schema,
+                    **({"table_ident": table_ident} if table_ident else {}),
+                },
+            )
+        # protocol sinks (http/socket/gelf/loki) emit from the written
+        # columnar output — a pruned per-route scan, committed per sink
+        # so a resumed run replays only the unsent ones
+        for r in plan.routes:
+            if r.out_cfg is None:
                 continue
-            sink_obs = Observation("sink_%s" % sink)
-            sink_df = sink_df.observe(sink_obs, F.count(F.lit(1)).alias("rows"))
-            tmp_dir = sink_dir + ".__tmp__"
-            if os.path.exists(tmp_dir):
-                shutil.rmtree(tmp_dir)
-            sink_df.write.mode("overwrite").parquet(tmp_dir)
-            if os.path.exists(sink_dir):
-                shutil.rmtree(sink_dir)
-            os.replace(tmp_dir, sink_dir)
-            rows = int(sink_obs.get.get("rows") or 0)
+            if resume and ledger.committed(r.sink):
+                result.skipped_sinks.append(r.sink)
+                result.sink_rows[r.sink] = ledger.state["sinks"][r.sink]["rows"]
+                continue
+            from gogstash_spark.outputs import emit
+
+            df_r = (
+                written.filter(F.col("route") == r.sink)
+                .drop("route", DOC_ID)  # internal cols never leave the engine
+            )
+            rows = emit(df_r, r.out_cfg)
+            result.sink_rows[r.sink] = rows
+            ledger.commit(r.sink, rows)
+            result.metrics[r.sink] = {"rows": rows}
+        routes_to_write = []
+    else:
+        routes_to_write = plan.routes
+        dyn = [r.sink for r in plan.routes if r.index_template]
+        if dyn:
+            raise ValueError(
+                "dynamic %%{}-index sinks %s need write_mode='partitioned' "
+                "(one partitionBy(route) write handles any index cardinality)" % dyn
+            )
+    for route in routes_to_write:
+        sink = route.sink
+        sink_dir = os.path.join(out_dir, sink)
+        if resume and ledger.committed(sink) and (
+            route.out_cfg is not None or os.path.exists(sink_dir)
+        ):
+            result.skipped_sinks.append(sink)
+            result.sink_rows[sink] = ledger.state["sinks"][sink]["rows"]
+            continue
+        sink_df = routed.filter(F.array_contains(F.col(ROUTES), sink)).drop(ROUTES)
+        if route.doc_id_template:
+            from gogstash_spark.logevent import format_expr
+
+            # THIS sink's rendered doc id (the shared _doc_id column
+            # may carry another doc-sink's rendering for co-routed rows)
+            sink_df = sink_df.withColumn(
+                DOC_ID, format_expr(sink_df, str(route.doc_id_template))
+            )
+            sink_df = (
+                sink_df.withColumn(
+                    "__dd",
+                    F.coalesce(
+                        F.col(DOC_ID),
+                        F.monotonically_increasing_id().cast("string"),
+                    ),
+                )
+                .dropDuplicates(["__dd"])
+                .drop("__dd")
+            )
+        if route.out_cfg is not None:
+            # protocol sink: stream out via foreachPartition, count
+            # task-side, commit by count (no directory to rename)
+            from gogstash_spark.outputs import emit
+
+            rows = emit(sink_df.drop(DOC_ID), route.out_cfg)
             result.sink_rows[sink] = rows
             ledger.commit(sink, rows)
-            result.metrics[sink] = dict(sink_obs.get)
-            if fail_after_sink == sink:
-                raise RuntimeError("injected failure after sink %s" % sink)
+            result.metrics[sink] = {"rows": rows}
+            continue
+        sink_obs = Observation("sink_%s" % sink)
+        sink_df = sink_df.observe(sink_obs, F.count(F.lit(1)).alias("rows"))
+        tmp_dir = sink_dir + ".__tmp__"
+        if os.path.exists(tmp_dir):
+            shutil.rmtree(tmp_dir)
+        sink_df.write.mode("overwrite").parquet(tmp_dir)
+        if os.path.exists(sink_dir):
+            shutil.rmtree(sink_dir)
+        os.replace(tmp_dir, sink_dir)
+        rows = int(sink_obs.get.get("rows") or 0)
+        result.sink_rows[sink] = rows
+        ledger.commit(sink, rows)
+        result.metrics[sink] = dict(sink_obs.get)
+        if fail_after_sink == sink:
+            raise RuntimeError("injected failure after sink %s" % sink)
 
-        # per-sink aggregates (report/statsd semantics,
-        # reference output/report/outputreport.go:80-92,
-        # output/statsd/outputstatsd.go:267-331)
-        for agg in agg_specs:
-            name = agg["name"]
-            if resume and ledger.committed("agg_%s" % name):
-                continue
-            if write_mode == "partitioned":
-                # aggregate from the written columnar output: the scan is
-                # pruned to the aggregate's columns, no parse recompute
-                exploded = _read_routed().withColumnRenamed("route", "sink")
-            else:
-                exploded = routed.select(F.explode(ROUTES).alias("sink"), "*")
-            if agg.get("__default__"):
-                agg = {
-                    **agg,
-                    "group_by": [k for k in agg["group_by"] if k in exploded.columns],
-                }
-            agg_df = compute_aggregate(exploded, agg)
-            agg_obs = Observation("agg_%s" % name)
-            agg_df = agg_df.observe(agg_obs, F.count(F.lit(1)).alias("rows"))
-            agg_dir = os.path.join(out_dir, "agg_%s" % name)
-            tmp_dir = agg_dir + ".__tmp__"
-            agg_df.write.mode("overwrite").parquet(tmp_dir)
-            if os.path.exists(agg_dir):
-                shutil.rmtree(agg_dir)
-            os.replace(tmp_dir, agg_dir)
-            n = int(agg_obs.get.get("rows") or 0)
-            result.agg_rows[name] = n
-            ledger.commit("agg_%s" % name, n)
-        if routed_executed:
-            # Observation.get BLOCKS until the observed node runs — it
-            # must only be read when the routed plan actually executed
-            # this run (a partitioned-mode resume that skips the write
-            # serves sinks/aggregates from the written files and never
-            # runs `routed`; reading obs.get there hangs forever)
-            try:
-                result.metrics["pipeline"] = dict(obs.get)
-            except Exception:
-                pass
-        # task-side accumulators registered by stages (e.g. grok rows/misses)
-        for stage_name, accs in (ctx.options.get("accumulators") or {}).items():
-            result.metrics["acc_%s" % stage_name] = {
-                k: int(a.value) for k, a in accs.items()
+    # per-sink aggregates (report/statsd semantics,
+    # reference output/report/outputreport.go:80-92,
+    # output/statsd/outputstatsd.go:267-331)
+    for agg in agg_specs:
+        name = agg["name"]
+        if resume and ledger.committed("agg_%s" % name):
+            continue
+        if write_mode == "partitioned":
+            # aggregate from the written columnar output: the scan is
+            # pruned to the aggregate's columns, no parse recompute
+            exploded = written.withColumnRenamed("route", "sink")
+        else:
+            exploded = routed.select(F.explode(ROUTES).alias("sink"), "*")
+        if agg.get("__default__"):
+            agg = {
+                **agg,
+                "group_by": [k for k in agg["group_by"] if k in exploded.columns],
             }
-    finally:
-        try:
-            routed.unpersist()
-        except Exception:
-            pass
+        agg_df = compute_aggregate(exploded, agg)
+        agg_obs = Observation("agg_%s" % name)
+        agg_df = agg_df.observe(agg_obs, F.count(F.lit(1)).alias("rows"))
+        agg_dir = os.path.join(out_dir, "agg_%s" % name)
+        tmp_dir = agg_dir + ".__tmp__"
+        agg_df.write.mode("overwrite").parquet(tmp_dir)
+        if os.path.exists(agg_dir):
+            shutil.rmtree(agg_dir)
+        os.replace(tmp_dir, agg_dir)
+        n = int(agg_obs.get.get("rows") or 0)
+        result.agg_rows[name] = n
+        ledger.commit("agg_%s" % name, n)
+    if routed_executed:
+        # Observation.get BLOCKS until the observed node runs — it
+        # must only be read when the routed plan actually executed
+        # this run (a partitioned-mode resume that skips the write
+        # serves sinks/aggregates from the written files and never
+        # runs `routed`; reading obs.get there hangs forever)
+        result.metrics["pipeline"] = dict(obs.get)
+    # task-side accumulators registered by stages (e.g. grok rows/misses)
+    for stage_name, accs in (ctx.options.get("accumulators") or {}).items():
+        result.metrics["acc_%s" % stage_name] = {
+            k: int(a.value) for k, a in accs.items()
+        }
     result.wall_sec = time.time() - t0
     return result

@@ -174,6 +174,9 @@ class TestFanoutDistribution:
             ._jdf.queryExecution().optimizedPlan().toString()
         )
         assert "RebalancePartitions" in plan
+        # keyed on route alone: a (route, salt) key spread every route
+        # over every write task, one small file per route per task
+        assert "__salt" not in plan
         plan_fixed = (
             _fanout_distribute(df, 32, size_by_data=False)
             ._jdf.queryExecution().optimizedPlan().toString()

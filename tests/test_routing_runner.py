@@ -171,6 +171,145 @@ class TestSkewSalting:
         assert biggest <= 10_000 * 0.25  # no partition holds the bulk
 
 
+def _route_files(out_dir: str) -> dict[str, int]:
+    """{route value: parquet data files} under out_dir/by_route."""
+    part_dir = os.path.join(out_dir, "by_route")
+    return {
+        d.split("=", 1)[1]: sum(
+            f.endswith(".parquet") for f in os.listdir(os.path.join(part_dir, d))
+        )
+        for d in os.listdir(part_dir)
+        if d.startswith("route=")
+    }
+
+
+class TestFanoutWrite:
+    """The default write is a REBALANCE keyed on route alone: files
+    follow the data (one per small route, advisory-sized pieces of a hot
+    one) and the committed output is read back once per run."""
+
+    def test_small_input_writes_one_file_per_route(self, spark, tmp_path):
+        """Routes well under the advisory partition size write one file
+        each. The input is large enough (several MB shuffled) that AQE
+        keeps one write task per core, so a key that spreads a route
+        over every task would write one file per route per task."""
+        events = spark.range(0, 120_000, numPartitions=8).selectExpr(
+            "concat('c', CAST(id % 97 AS STRING)) AS conv_id",
+            "CAST(id AS INT) AS turn_idx",
+            "element_at(array('user', 'tool', 'assistant'), CAST(id % 3 AS INT) + 1) AS role",
+            "sha2(CAST(id AS STRING), 256) AS text",
+        )
+        out = str(tmp_path / "out")
+        res = run_pipeline(
+            spark,
+            {"input": {}, "filter": [],
+             "output": [{"type": "table", "name": "by_role", "index": "%{role}"}],
+             "aggregate": [{"name": "counts", "group_by": ["role"]}]},
+            input_df=events, out_dir=out, resume=False,
+        )
+        assert res.sink_rows == {"user": 40_000, "tool": 40_000, "assistant": 40_000}
+        assert _route_files(out) == {"user": 1, "tool": 1, "assistant": 1}
+        assert res.metrics["lineage"]["files"] == 3
+
+    def test_hot_route_still_spreads(self, spark, tmp_path):
+        """A route holding 80% of the rows is split by AQE's rebalance
+        skew handling into advisory-sized pieces, one file each — the
+        route-only key must not funnel it through one write task."""
+        key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+        old = spark.conf.get(key)
+        spark.conf.set(key, str(256 * 1024))
+        try:
+            events = spark.range(0, 400_000, numPartitions=16).selectExpr(
+                "CAST(id AS STRING) AS conv_id",
+                "CAST(id AS INT) AS turn_idx",
+                "IF(id % 5 = 0, concat('cold', CAST(id % 4 AS STRING)), 'hot') AS lane",
+            )
+            out = str(tmp_path / "out")
+            res = run_pipeline(
+                spark,
+                {"input": {}, "filter": [],
+                 "output": [{"type": "table", "name": "by_lane", "index": "%{lane}"}],
+                 "aggregate": [{"name": "counts", "group_by": ["lane"]}]},
+                input_df=events, out_dir=out, resume=False,
+            )
+        finally:
+            spark.conf.set(key, old)
+        assert res.sink_rows["hot"] == 320_000
+        files = _route_files(out)
+        assert files["hot"] >= 4, files
+        assert res.metrics["lineage"]["files"] == sum(files.values())
+
+    def test_written_output_listed_once_per_run(self, spark, tmp_path, monkeypatch):
+        """Lineage, the rollup and every aggregate share ONE read of
+        by_route: each fresh reader re-lists the route directories (a
+        Spark job of its own past 32 directories) and re-infers the
+        schema."""
+        events = spark.createDataFrame(
+            [("C1", 1, "user", "hi"), ("C2", 2, "tool", "x"), ("C3", 3, "user", "y")],
+            "conv_id string, turn_idx int, role string, text string",
+        )
+        cls = type(spark.read)
+        loads = []
+        orig = cls.load
+
+        def spy(self, path=None, *a, **k):
+            if isinstance(path, str) and path.rstrip("/").endswith("by_route"):
+                loads.append(path)
+            return orig(self, path, *a, **k)
+
+        monkeypatch.setattr(cls, "load", spy)
+        res = run_pipeline(
+            spark,
+            {"input": {}, "filter": [],
+             "output": [{"type": "table", "name": "by_role", "index": "%{role}"}],
+             "aggregate": [{"name": "counts", "group_by": ["role"]},
+                           {"name": "per_conv", "group_by": ["conv_id"]}]},
+            input_df=events, out_dir=str(tmp_path / "out"), resume=False,
+        )
+        assert res.sink_rows == {"user": 2, "tool": 1}
+        assert res.agg_rows == {"counts": 2, "per_conv": 3}
+        assert len(loads) == 1, loads
+
+
+class TestRouteValueTypes:
+    def test_numeric_looking_route_values_stay_strings(self, spark, tmp_path):
+        """Index values '007', '042', '500' must come back as those
+        strings. Partition-type inference on the read-back turned them
+        into ints (sink_rows {7: 1, 42: 1, 500: 2}); the written schema
+        is used instead, and recorded in the ledger so a write-skipping
+        resume reads the same way."""
+        import json
+
+        events = spark.createDataFrame(
+            [("C1", 1, "007"), ("C2", 2, "042"), ("C3", 3, "500"), ("C4", 4, "500")],
+            "conv_id string, turn_idx int, code string",
+        )
+        spec = {
+            "input": {}, "filter": [],
+            "output": [{"type": "table", "name": "by_code", "index": "%{code}"}],
+            "aggregate": [{"name": "counts", "group_by": ["code"]}],
+        }
+        out = str(tmp_path / "out")
+        res = run_pipeline(spark, spec, input_df=events, out_dir=out, resume=False)
+        assert res.sink_rows == {"007": 1, "042": 1, "500": 2}
+        agg_path = os.path.join(out, "agg_counts")
+        assert dict(spark.read.parquet(agg_path).dtypes)["sink"] == "string"
+
+        # resume with the write committed: the aggregate is re-derived
+        # from by_route, read with the schema the ledger recorded
+        ledger_path = os.path.join(out, "_ledger.json")
+        with open(ledger_path) as f:
+            state = json.load(f)
+        assert state["sinks"]["__partitioned__"]["schema"]["type"] == "struct"
+        del state["sinks"]["agg_counts"]
+        with open(ledger_path, "w") as f:
+            json.dump(state, f)
+        res = run_pipeline(spark, spec, input_df=events, out_dir=out, resume=True)
+        assert res.agg_rows == {"counts": 3}
+        sinks = {r["sink"]: r["n"] for r in spark.read.parquet(agg_path).collect()}
+        assert sinks == {"007": 1, "042": 1, "500": 2}
+
+
 class TestGogstashConfigAdapter:
     """A reference gogstash YAML config runs end-to-end through
     PipelineSpec.from_gogstash with its own module/key names."""
