@@ -16,6 +16,12 @@ partitions — a no-op on well-partitioned input, so at 100 TB (where
 scans and shuffles already exceed core count) it never fires and never
 adds an exchange. Values are row-local or order-insensitive in every
 caller, so results are unchanged.
+
+Neither helper swallows an error. spread()'s partition probe plans the
+frame, which under AQE runs its shuffle stages; a failure there is the
+frame's own failure and reaches the caller unchanged. plan_bytes()
+returns None only for a streaming frame, which has no batch plan to
+size.
 """
 
 from __future__ import annotations
@@ -28,21 +34,16 @@ def spread(df: DataFrame, target: int | None = None) -> DataFrame:
         return df
     sc = df.sparkSession.sparkContext
     t = target or sc.defaultParallelism
-    try:
-        n = df.rdd.getNumPartitions()
-    except Exception:
-        return df
-    return df.repartition(t) if n < t else df
+    return df.repartition(t) if df.rdd.getNumPartitions() < t else df
 
 
 def plan_bytes(df: DataFrame) -> int | None:
     """Optimizer size estimate of a frame (bytes) — file-size-derived
-    for scans; None when the JVM plan is unavailable. Used to pick
+    for scans; None for a streaming frame. Used to pick
     broadcast-vs-shuffle shapes from DATA SIZE with a conservative env
     budget (GOGSTASH_BROADCAST_CELLS_MB), so local byte-light runs get
     shuffle-free joins while cluster-scale inputs keep the shuffled
     plan."""
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
+    if df.isStreaming:
         return None
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())

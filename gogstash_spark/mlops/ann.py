@@ -17,6 +17,7 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from gogstash_spark.mlops.dedup import cap_buckets
 
 
 def _cos(a, b):
@@ -119,21 +120,6 @@ def hyperplane_tables_df(spark, dim: int, n_bits: int, n_tables: int, seed: int 
     return pdf.agg(F.sort_array(F.collect_list(F.struct("t", "ws"))).alias("tables"))
 
 
-def _cap_buckets(df: DataFrame, keys: list[str], cap: int | None) -> DataFrame:
-    """Drop buckets holding more than `cap` rows (mass-duplicate
-    clusters); callers surface dropped counts via a groupBy on the same
-    keys — never a silent truncation at the API level."""
-    if cap is None:
-        return df
-    ok = (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__bcnt"))
-        .filter(F.col("__bcnt") <= cap)
-        .select(*keys)
-    )
-    return df.join(ok, keys)
-
-
 def lsh_topk_multi(
     emb: DataFrame,
     dim: int,
@@ -167,7 +153,7 @@ def lsh_topk_multi(
             hyperplane_bucket(F.col("vec"), F.col("tb.ws")).alias("b"),
         )
     )
-    keyed = _cap_buckets(keyed, ["t", "b"], bucket_cap)
+    keyed = cap_buckets(keyed, ["t", "b"], bucket_cap)
     q = keyed.select(F.col("id").alias("q_id"), "t", "b")
     if max_query_id is not None:
         q = q.filter(F.col("q_id") < max_query_id)
@@ -523,7 +509,7 @@ def cosine_near_dup_pairs(
         F.col(vec_col).alias("vec"),
         sign_bucket(F.col(vec_col), n_bits).alias("bucket"),
     )
-    with_b = _cap_buckets(with_b, ["bucket"], bucket_cap)
+    with_b = cap_buckets(with_b, ["bucket"], bucket_cap)
     a = with_b.select(F.col("id").alias("id_a"), F.col("vec").alias("va"), "bucket")
     b = with_b.select(F.col("id").alias("id_b"), F.col("vec").alias("vb"), "bucket")
     return (
@@ -681,7 +667,7 @@ def semantic_dedup(
     if cluster_cap is None:
         capped = placed
     else:
-        # unlike the generic _cap_buckets (whose keep-list can be
+        # unlike the generic cap_buckets (whose key lists can be
         # corpus-sized for LSH band keys), the cell keep-list here is
         # AT MOST n_centroids rows — broadcast it EXPLICITLY. Left to
         # its estimates the planner has broadcast the corpus side of

@@ -18,6 +18,7 @@ the dedup semantics).
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import Column, DataFrame, Window
@@ -159,23 +160,33 @@ def lsh_hot_buckets(buckets: DataFrame, bucket_cap: int) -> DataFrame:
     )
 
 
-def _cap_buckets(buckets: DataFrame, bucket_cap: int) -> DataFrame:
-    """Drop every (band, v) bucket holding more than bucket_cap members
-    BEFORE the self-join — the join cost of a bucket is quadratic in its
-    size, so one hot bucket dominates everything. Pair with
-    lsh_hot_buckets to report what was dropped (never silently)."""
-    hot = (
-        buckets.groupBy("band", "v")
-        .agg(F.count(F.lit(1)).alias("__bcnt"))
-        .filter(F.col("__bcnt") > bucket_cap)
-        .select("band", "v")
+def cap_buckets(df: DataFrame, keys: list[str], cap: int | None) -> DataFrame:
+    """Drop every bucket (rows sharing `keys`) holding more than `cap`
+    rows BEFORE a bucket self-join: the join cost of a bucket is
+    quadratic in its size, so one hot bucket dominates everything.
+    cap=None means no cap and returns `df` unchanged. Pair with
+    lsh_hot_buckets (or a groupBy on the same keys) to report what was
+    dropped, so a cap is never a silent truncation.
+
+    With a cap, rows with a NULL in any key are dropped explicitly, so
+    the result equals the inner join against the under-cap key list
+    whatever the caller passes (an anti-join alone would keep them; an
+    equi-join on the bucket keys drops them anyway). The over-cap key
+    list is tiny by the capping premise, so AQE's runtime join
+    switching broadcasts it and `df` keeps its shuffle only where the
+    candidate self-join needs it anyway."""
+    if cap is None:
+        return df
+    keyed = df.filter(
+        functools.reduce(lambda a, b: a & b, [F.col(k).isNotNull() for k in keys])
     )
-    # anti-join against the OVER-cap keys (complement of the old inner
-    # join on the under-cap list — identical rows: band/v are never
-    # null). hot is tiny by the capping premise, so AQE's runtime join
-    # switching broadcasts it and the buckets side keeps its shuffle
-    # only where the candidate self-join needs it anyway.
-    return buckets.join(hot, ["band", "v"], "left_anti")
+    hot = (
+        keyed.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("__bcnt"))
+        .filter(F.col("__bcnt") > cap)
+        .select(*keys)
+    )
+    return keyed.join(hot, keys, "left_anti")
 
 
 def minhash_lsh_pairs(
@@ -231,8 +242,7 @@ def minhash_lsh_pairs(
     bcast_mb = int(os.environ.get("GOGSTASH_BROADCAST_CELLS_MB", "256"))
     small = (plan_bytes(df) or (bcast_mb << 20) + 1) <= (bcast_mb << 20)
     buckets = lsh_band_buckets(sig, bands, rows_per_band)
-    if bucket_cap is not None:
-        buckets = _cap_buckets(buckets, bucket_cap)
+    buckets = cap_buckets(buckets, ["band", "v"], bucket_cap)
     cand = (
         buckets.alias("x")
         .join(buckets.alias("y"), ["band", "v"])
@@ -561,8 +571,7 @@ def simhash_near_dup_pairs(
             for i in range(bands)
         ])).alias("b"),
     ).select("id", F.col("b.band").alias("band"), F.col("b.v").alias("v"))
-    if bucket_cap is not None:
-        bandv = _cap_buckets(bandv, bucket_cap)
+    bandv = cap_buckets(bandv, ["band", "v"], bucket_cap)
     cand = (
         bandv.alias("x")
         .join(bandv.alias("y"), ["band", "v"])
@@ -907,8 +916,9 @@ def neardup_incremental(
             sig_b.withColumnRenamed("id", id_col), id_col, "left"
         )
     bands_b = lsh_band_buckets(sig_b, bands, rows_per_band)
-    bands_l = _cap_buckets(
+    bands_l = cap_buckets(
         lsh_band_buckets(ledger_sig.withColumnRenamed(id_col, "id"), bands, rows_per_band),
+        ["band", "v"],
         bucket_cap,
     ).select(F.col("id").alias("lid"), "band", "v")
     cand = (

@@ -14,6 +14,14 @@ Scale design (the part gogstash never faced — one box, one stream):
   schema that was written (no partition-type inference: a route "007"
   stays the string "007"). Lineage, protocol sinks and aggregates share
   that one frame and its file listing.
+- After the by_route commit and its read-back, the post-write jobs
+  (the lineage sidecar write, the per-route rollup and every
+  aggregate's write) are submitted together as concurrent Spark jobs,
+  one thread each, and all of them settle before the run goes on. They
+  move little data, so per-job driver latency, not work, sets the
+  tail's length, and overlapping the jobs shortens it. Each thread
+  inherits the caller's job group, description and tags. Only the
+  calling thread commits to the ledger.
 - write_mode="per_sink" opts into K separate filtered writes with
   per-sink resume granularity. Its hot conv_ids are salted: repartition
   on (conv_id, salt) where salt = xxhash64(conv_id, turn_idx) % n_salts,
@@ -34,11 +42,14 @@ import json
 import os
 import shutil
 import time
+from collections.abc import Callable
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+from pyspark.util import inheritable_thread_target
 
 from gogstash_spark.operators import Context
 from gogstash_spark.plans.compile import DOC_ID, ROUTES, CompiledPipeline, compile_pipeline
@@ -57,7 +68,11 @@ class RunResult:
 
 
 class SnapshotLedger:
-    """sincedb-analog commit ledger: {sink: {rows, committed_at}}."""
+    """sincedb-analog commit ledger: {sink: {rows, committed_at}}.
+
+    Single writer: `commit` rewrites `<path>.tmp` and renames it over
+    the ledger, so two threads committing at once would race on the
+    temp file. run_pipeline commits only from its calling thread."""
 
     def __init__(self, path: str):
         self.path = path
@@ -184,6 +199,69 @@ def salted_repartition(
     ).drop("__salt")
 
 
+def _settle(spark: SparkSession, jobs: list[Callable]) -> list[Future]:
+    """Run every job in its own thread, so their Spark jobs run
+    concurrently, and wait until all of them have settled. Each target
+    inherits the caller's job group, description and tags. The pool
+    lives for this call only; one worker per job. Returns the futures
+    in submission order: read each one's result or exception."""
+    if not jobs:
+        return []
+    with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
+        return [pool.submit(inheritable_thread_target(spark)(job)) for job in jobs]
+
+
+def _raise_first_failure(futures: list[Future]) -> None:
+    for fut in futures:
+        if fut.exception() is not None:
+            raise fut.exception()
+
+
+def _replace_dir(tmp_dir: str, final_dir: str) -> None:
+    """Commit a finished temp-dir write with one rename."""
+    if os.path.exists(final_dir):
+        shutil.rmtree(final_dir)
+    os.replace(tmp_dir, final_dir)
+
+
+def _aggregate_job(exploded: DataFrame, agg: dict, out_dir: str) -> Callable[[], int]:
+    """One aggregate's observe -> temp write -> rename over the
+    exploded (sink, event) frame, as a thread target returning the
+    aggregate's row count. The aggregate is planned inside the target,
+    so a bad spec fails its own job and not its siblings."""
+
+    def job() -> int:
+        spec = agg
+        if spec.get("__default__"):
+            spec = {
+                **spec,
+                "group_by": [k for k in spec["group_by"] if k in exploded.columns],
+            }
+        name = "agg_%s" % spec["name"]
+        obs = Observation(name)
+        agg_df = compute_aggregate(exploded, spec).observe(
+            obs, F.count(F.lit(1)).alias("rows")
+        )
+        agg_dir = os.path.join(out_dir, name)
+        tmp_dir = agg_dir + ".__tmp__"
+        agg_df.write.mode("overwrite").parquet(tmp_dir)
+        _replace_dir(tmp_dir, agg_dir)
+        return int(obs.get.get("rows") or 0)
+
+    return job
+
+
+def _commit_aggregates(
+    ledger: SnapshotLedger, result: RunResult, aggs: list[dict], futures: list[Future]
+) -> None:
+    """Commit each finished aggregate in spec order (calling thread
+    only: the ledger has a single writer)."""
+    for agg, fut in zip(aggs, futures):
+        if fut.exception() is None:
+            result.agg_rows[agg["name"]] = n = fut.result()
+            ledger.commit("agg_%s" % agg["name"], n)
+
+
 def resolve_table_format(spark: SparkSession, requested: str | None) -> tuple[str, str | None]:
     """('iceberg'|'delta'|'parquet', fallback_reason): a requested ACID
     format is used only when its runtime is actually on the classpath
@@ -232,6 +310,23 @@ def run_pipeline(
     output with the written schema. The per-file lineage sidecar, the
     per-route row totals, the protocol sinks and the aggregates all
     derive from that one frame, so the output is listed once per run.
+
+    After the read-back, the lineage sidecar write, the rollup collect
+    and every aggregate's observe -> temp write -> rename run as
+    concurrent Spark jobs, one thread each (a write-skipping resume
+    runs only the aggregates; per_sink mode runs its aggregates this
+    way after its sequential sink writes). The ledger is committed
+    from the calling thread once all of them have settled, in this
+    order:
+    - `__partitioned__`, when lineage and rollup succeeded; otherwise
+      their first error is raised here. The aggregates have run by
+      then, so their agg_* directories hold the written by_route's
+      totals but are not in the ledger, and a resumed run redoes them;
+    - each finished aggregate, in spec order;
+    - the protocol sinks, one at a time, each committed as it emits;
+    - then the first failed aggregate's error is re-raised. A
+      protocol sink's own error propagates at once and stops the run.
+
     "per_sink" is the opt-in for workloads needing per-sink resume
     granularity over K heterogeneous protocol sinks; its plan
     localCheckpoints the routed frame, which serializes on local mode's
@@ -322,6 +417,9 @@ def run_pipeline(
         routed = routed.localCheckpoint(eager=True)
 
     result = RunResult()
+    pending_aggs = [
+        a for a in agg_specs if not (resume and ledger.committed("agg_%s" % a["name"]))
+    ]
     # per_sink mode always materializes `routed` (localCheckpoint above);
     # partitioned mode only runs it when the write isn't resume-skipped
     routed_executed = write_mode != "partitioned"
@@ -411,9 +509,7 @@ def run_pipeline(
                 # no table format on the classpath: atomic commit =
                 # write to a temp dir + one rename
                 exploded.write.mode("overwrite").partitionBy("route").parquet(tmp_dir)
-                if os.path.exists(part_dir):
-                    shutil.rmtree(part_dir)
-                os.replace(tmp_dir, part_dir)
+                _replace_dir(tmp_dir, part_dir)
             elif fmt == "iceberg":
                 # ACID snapshot commit via DataFrameWriterV2: the v1
                 # writer's save(path) requires a pre-existing table
@@ -439,6 +535,7 @@ def run_pipeline(
         # frame's file index, so by_route is listed once
         written = _read_written(spark, read_fmt, read_ident, part_dir, read_schema)
 
+        lineage_jobs: list[Callable] = []
         if not write_skipped:
             # per-partition (per output file) row-count lineage in one
             # pruned scan, written to a parquet SIDECAR — at 100 TB the
@@ -460,17 +557,36 @@ def run_pipeline(
                 F.count(F.lit(1)).alias("rows")
             )
             lin_dir = os.path.join(out_dir, "_lineage")
-            lin_tmp = lin_dir + ".__tmp__"
-            lineage_df.write.mode("overwrite").parquet(lin_tmp)
-            if os.path.exists(lin_dir):
-                shutil.rmtree(lin_dir)
-            os.replace(lin_tmp, lin_dir)
-            rollup = (
-                lineage_df.groupBy("route")
-                .agg(F.sum("rows").alias("rows"), F.count(F.lit(1)).alias("files"))
-                .collect()
-            )
-            counts: dict[str, int] = {rr["route"]: int(rr["rows"]) for rr in rollup}
+
+            def write_lineage() -> None:
+                lin_tmp = lin_dir + ".__tmp__"
+                lineage_df.write.mode("overwrite").parquet(lin_tmp)
+                _replace_dir(lin_tmp, lin_dir)
+
+            def rollup() -> list:
+                return (
+                    lineage_df.groupBy("route")
+                    .agg(F.sum("rows").alias("rows"), F.count(F.lit(1)).alias("files"))
+                    .collect()
+                )
+
+            lineage_jobs = [write_lineage, rollup]
+
+        # lineage, rollup and every pending aggregate (from the written
+        # columnar output: scans pruned to each one's columns, no parse
+        # recompute) run as concurrent Spark jobs; the ledger is then
+        # committed from this thread
+        agg_frame = written.withColumnRenamed("route", "sink")
+        settled = _settle(
+            spark,
+            lineage_jobs + [_aggregate_job(agg_frame, a, out_dir) for a in pending_aggs],
+        )
+        # by_route is committed only when lineage and rollup succeeded,
+        # and an aggregate only over a committed by_route
+        _raise_first_failure(settled[: len(lineage_jobs)])
+        if lineage_jobs:
+            rolled = settled[1].result()
+            counts: dict[str, int] = {rr["route"]: int(rr["rows"]) for rr in rolled}
             result.sink_rows = {
                 r.sink: int(counts.get(r.sink, 0))
                 for r in plan.routes
@@ -479,7 +595,7 @@ def run_pipeline(
             for k, v in counts.items():  # dynamic %{}-index route values
                 result.sink_rows.setdefault(k, int(v))
             result.metrics["lineage"] = {
-                "files": sum(int(r["files"]) for r in rollup),
+                "files": sum(int(r["files"]) for r in rolled),
                 "path": lin_dir,
                 "route_rows": counts,
             }
@@ -495,9 +611,13 @@ def run_pipeline(
                     **({"table_ident": table_ident} if table_ident else {}),
                 },
             )
+        _commit_aggregates(ledger, result, pending_aggs, settled[len(lineage_jobs):])
+
         # protocol sinks (http/socket/gelf/loki) emit from the written
         # columnar output — a pruned per-route scan, committed per sink
-        # so a resumed run replays only the unsent ones
+        # so a resumed run replays only the unsent ones. They emit
+        # before a failed aggregate's error is re-raised, so one bad
+        # aggregate spec does not hold back every protocol sink.
         for r in plan.routes:
             if r.out_cfg is None:
                 continue
@@ -515,6 +635,7 @@ def run_pipeline(
             result.sink_rows[r.sink] = rows
             ledger.commit(r.sink, rows)
             result.metrics[r.sink] = {"rows": rows}
+        _raise_first_failure(settled)
         routes_to_write = []
     else:
         routes_to_write = plan.routes
@@ -524,6 +645,8 @@ def run_pipeline(
                 "dynamic %%{}-index sinks %s need write_mode='partitioned' "
                 "(one partitionBy(route) write handles any index cardinality)" % dyn
             )
+    # the per-sink writes stay sequential: per-sink resume and
+    # fail_after_sink depend on their order
     for route in routes_to_write:
         sink = route.sink
         sink_dir = os.path.join(out_dir, sink)
@@ -569,9 +692,7 @@ def run_pipeline(
         if os.path.exists(tmp_dir):
             shutil.rmtree(tmp_dir)
         sink_df.write.mode("overwrite").parquet(tmp_dir)
-        if os.path.exists(sink_dir):
-            shutil.rmtree(sink_dir)
-        os.replace(tmp_dir, sink_dir)
+        _replace_dir(tmp_dir, sink_dir)
         rows = int(sink_obs.get.get("rows") or 0)
         result.sink_rows[sink] = rows
         ledger.commit(sink, rows)
@@ -579,36 +700,14 @@ def run_pipeline(
         if fail_after_sink == sink:
             raise RuntimeError("injected failure after sink %s" % sink)
 
-    # per-sink aggregates (report/statsd semantics,
-    # reference output/report/outputreport.go:80-92,
-    # output/statsd/outputstatsd.go:267-331)
-    for agg in agg_specs:
-        name = agg["name"]
-        if resume and ledger.committed("agg_%s" % name):
-            continue
-        if write_mode == "partitioned":
-            # aggregate from the written columnar output: the scan is
-            # pruned to the aggregate's columns, no parse recompute
-            exploded = written.withColumnRenamed("route", "sink")
-        else:
-            exploded = routed.select(F.explode(ROUTES).alias("sink"), "*")
-        if agg.get("__default__"):
-            agg = {
-                **agg,
-                "group_by": [k for k in agg["group_by"] if k in exploded.columns],
-            }
-        agg_df = compute_aggregate(exploded, agg)
-        agg_obs = Observation("agg_%s" % name)
-        agg_df = agg_df.observe(agg_obs, F.count(F.lit(1)).alias("rows"))
-        agg_dir = os.path.join(out_dir, "agg_%s" % name)
-        tmp_dir = agg_dir + ".__tmp__"
-        agg_df.write.mode("overwrite").parquet(tmp_dir)
-        if os.path.exists(agg_dir):
-            shutil.rmtree(agg_dir)
-        os.replace(tmp_dir, agg_dir)
-        n = int(agg_obs.get.get("rows") or 0)
-        result.agg_rows[name] = n
-        ledger.commit("agg_%s" % name, n)
+    if write_mode != "partitioned":
+        # every pending aggregate over the checkpointed routed frame, as
+        # concurrent Spark jobs; the ledger is then committed from this
+        # thread
+        agg_frame = routed.select(F.explode(ROUTES).alias("sink"), "*")
+        settled = _settle(spark, [_aggregate_job(agg_frame, a, out_dir) for a in pending_aggs])
+        _commit_aggregates(ledger, result, pending_aggs, settled)
+        _raise_first_failure(settled)
     if routed_executed:
         # Observation.get BLOCKS until the observed node runs — it
         # must only be read when the routed plan actually executed

@@ -246,6 +246,19 @@ FROM r WHERE rn = 1"""
         hot = dedup.lsh_hot_buckets(buckets, bucket_cap=10).collect()
         assert len(hot) == 4 and all(r["cnt"] == 50 for r in hot)
 
+    def test_cap_buckets_drops_null_keys_and_hot_buckets(self, spark):
+        """The shared cap helper equals the inner join against the
+        under-cap key list: a NULL-key row is dropped (an anti-join
+        alone would keep it), an over-cap bucket is dropped, and
+        cap=None returns the frame unchanged."""
+        rows = [(i, "hot") for i in range(5)] + [(10, "cold"), (11, None)]
+        df = spark.createDataFrame(rows, "id long, v string")
+        got = sorted(r["id"] for r in dedup.cap_buckets(df, ["v"], 3).collect())
+        assert got == [10]
+        under = df.groupBy("v").count().filter("count <= 3").select("v")
+        assert got == sorted(r["id"] for r in df.join(under, ["v"]).collect())
+        assert dedup.cap_buckets(df, ["v"], None) is df
+
     def test_simhash64_banding_is_exact(self, spark, docs):
         """banded pair detection must find EXACTLY the pairs a brute
         all-pairs Hamming scan finds (pigeonhole completeness)."""

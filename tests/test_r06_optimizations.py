@@ -15,7 +15,7 @@ from decimal import ROUND_HALF_UP, Decimal
 import pytest
 from pyspark.sql import functions as F
 
-from gogstash_spark.functions.partitions import spread
+from gogstash_spark.functions.partitions import plan_bytes, spread
 from gogstash_spark.mlops.ann import _round6_ge_bound, semantic_dedup
 
 
@@ -118,6 +118,33 @@ class TestSpread:
             spark.readStream.format("rate").option("rowsPerSecond", 1).load()
         )
         assert spread(sdf) is sdf
+
+    def test_failing_stage_reaches_the_caller(self, spark):
+        """The partition probe plans the frame, which under AQE runs its
+        shuffle stages; a failure there is the frame's own and must
+        reach the caller, not turn spread() into a silent no-op."""
+        from pyspark.errors import PySparkException
+
+        bad = (
+            spark.range(8)
+            .withColumn("x", F.when(F.col("id") >= 0, F.raise_error(F.lit("boom"))))
+            .groupBy("x")
+            .count()
+        )
+        with pytest.raises(PySparkException, match="boom"):
+            spread(bad)
+
+
+class TestPlanBytes:
+    def test_batch_frame_is_sized(self, spark):
+        assert plan_bytes(spark.range(1000)) == 8000
+
+    def test_streaming_frame_has_no_size(self, spark):
+        """The one fallback: a streaming frame has no batch plan to size
+        (its optimizedPlan raises), so the broadcast gates treat it as
+        over budget."""
+        sdf = spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+        assert plan_bytes(sdf) is None
 
 
 class TestBpeLiteralMerges:

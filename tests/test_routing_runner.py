@@ -183,6 +183,19 @@ def _route_files(out_dir: str) -> dict[str, int]:
     }
 
 
+def _status_jobs(spark) -> dict[int, str | None]:
+    """{job id: job group} for every job the status store holds, read
+    the way perfbench's Tracer.fill_counts reads it."""
+    jsc = spark.sparkContext._jsc.sc()
+    jvm = spark._jvm
+    conv = jvm.scala.jdk.javaapi.CollectionConverters
+    jsc.listenerBus().waitUntilEmpty(60_000)
+    return {
+        int(j.jobId()): j.jobGroup().get() if j.jobGroup().isDefined() else None
+        for j in conv.asJava(jsc.statusStore().jobsList(jvm.java.util.ArrayList()))
+    }
+
+
 class TestFanoutWrite:
     """The default write is a REBALANCE keyed on route alone: files
     follow the data (one per small route, advisory-sized pieces of a hot
@@ -486,6 +499,104 @@ output:
 
         assert FILTERS["rate_limit"] is FILTERS["ratelimit"]
         assert FILTERS["geoip2"] is FILTERS["geoip"]
+
+
+class TestConcurrentTail:
+    """After the by_route commit, lineage, the rollup and every
+    aggregate run as concurrent Spark jobs; only the calling thread
+    commits to the ledger."""
+
+    SPEC_ROWS = [("C1", 1, "user"), ("C2", 2, "tool"), ("C3", 3, "user")]
+
+    def _events(self, spark):
+        return spark.createDataFrame(
+            self.SPEC_ROWS, "conv_id string, turn_idx int, role string"
+        )
+
+    def test_failed_aggregate_lets_its_siblings_commit(self, spark, tmp_path):
+        """`bad` groups by a missing column. Its error is re-raised only
+        after every sibling has settled: both good aggregates are
+        committed, `bad` is not, and no temp directory is left."""
+        import json
+
+        from pyspark.errors import AnalysisException
+
+        out = str(tmp_path / "out")
+        spec = {
+            "input": {}, "filter": [],
+            "output": [{"type": "table", "name": "by_role", "index": "%{role}"}],
+            "aggregate": [
+                {"name": "ok_a", "group_by": ["role"]},
+                {"name": "bad", "group_by": ["no_such_col"]},
+                {"name": "ok_b", "group_by": ["conv_id"]},
+            ],
+        }
+        with pytest.raises(AnalysisException, match="no_such_col"):
+            run_pipeline(spark, spec, input_df=self._events(spark), out_dir=out, resume=False)
+        with open(os.path.join(out, "_ledger.json")) as f:
+            committed = json.load(f)["sinks"]
+        assert "__partitioned__" in committed
+        assert committed["agg_ok_a"]["rows"] == 2
+        assert committed["agg_ok_b"]["rows"] == 3
+        assert "agg_bad" not in committed
+        assert [d for d in os.listdir(out) if d.endswith(".__tmp__")] == []
+
+    def test_protocol_sink_emits_before_an_aggregate_error(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A protocol sink next to a failing aggregate still emits and
+        is committed; the aggregate's error is re-raised after it."""
+        import json
+
+        from pyspark.errors import AnalysisException
+
+        from gogstash_spark import outputs
+
+        emitted = {}
+
+        def fake_emit(df, cfg):
+            emitted[cfg["name"]] = n = df.count()
+            return n
+
+        monkeypatch.setattr(outputs, "emit", fake_emit)
+        out = str(tmp_path / "out")
+        spec = {
+            "input": {}, "filter": [],
+            "output": [{"type": "table", "name": "by_role", "index": "%{role}"},
+                       {"type": "socket", "name": "wire", "address": "127.0.0.1:9"}],
+            "aggregate": [{"name": "bad", "group_by": ["no_such_col"]}],
+        }
+        with pytest.raises(AnalysisException, match="no_such_col"):
+            run_pipeline(spark, spec, input_df=self._events(spark), out_dir=out, resume=False)
+        assert emitted == {"wire": 3}
+        with open(os.path.join(out, "_ledger.json")) as f:
+            committed = json.load(f)["sinks"]
+        assert committed["wire"]["rows"] == 3
+        assert "agg_bad" not in committed
+
+    def test_tail_jobs_keep_the_callers_job_group(self, spark, tmp_path):
+        """Every Spark job of the call, the concurrent ones included,
+        carries the job group the caller set, so status-store metrics
+        of the call stay attributed to it."""
+        sc = spark.sparkContext
+        last = max(_status_jobs(spark), default=-1)
+        sc.setJobGroup("g3", "concurrent tail")
+        try:
+            res = run_pipeline(
+                spark,
+                {"input": {}, "filter": [],
+                 "output": [{"type": "table", "name": "by_role", "index": "%{role}"}],
+                 "aggregate": [{"name": "counts", "group_by": ["role"]},
+                               {"name": "per_conv", "group_by": ["conv_id"]}]},
+                input_df=self._events(spark), out_dir=str(tmp_path / "out"), resume=False,
+            )
+        finally:
+            sc._jsc.clearJobGroup()
+        assert res.agg_rows == {"counts": 2, "per_conv": 3}
+        groups = [g for i, g in _status_jobs(spark).items() if i > last]
+        # the write, the lineage write, the rollup and two aggregates
+        assert len(groups) >= 5, groups
+        assert set(groups) == {"g3"}
 
 
 def oracle_routes(pdf: pd.DataFrame) -> dict[str, set]:
